@@ -6,10 +6,16 @@ Flow per dataset (reference ``main.py:379-586``):
 1. incremental skip — compare source `Modified` vs stored `Modified`
    (S19, ``main.py:38-95``); skip unless changed or ``force``.
 2. land tables — each table DataFrame written under the dated snapshot
-   layout (S15), with DataProperties' dotted columns renamed (S11).
+   layout (S15), with DataProperties' dotted columns renamed (S11). The
+   tables land concurrently, one Spark job each, from a thread pool sized
+   to the cores, under the caller's job group and local properties. If any
+   table fails, the in-flight writes finish and the error is re-raised
+   before steps 3 and 4, so the next run does not skip.
 3. metadata + column-description side files (S13/S14).
-4. catalog registration — idempotent namespace + external tables + column
-   comments (S20/S21/S22) when ``endpoint="catalog"``.
+4. catalog registration — idempotent namespace + one external table per
+   landed file, declared with the schema it was landed with and, for the
+   main table, its column comments (S20/S21/S22) when
+   ``endpoint="catalog"``.
 
 ``endpoint`` ∈ {"local", "catalog"} mirrors the reference's
 {local, gcs, bq} endpoints (``main.py:536-537``) minus the cloud hop:
@@ -22,9 +28,12 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable, Mapping
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from statline_bq_spark.functions.cleaning import rename_dotted_columns
 from statline_bq_spark.plans import layout
@@ -74,10 +83,8 @@ def process_dataset(
     if not force and not md.modified_changed(metadata, stored):
         return DatasetResult(dataset_id=dataset_id, skipped=True)
 
-    # -- S10/S15: land each ingestable table under the dated snapshot --------
-    files: dict[str, str] = {}
-    row_counts: dict[str, int] = {}
-    for table, thunk in sorted(ingest_tables(dict(tables)).items()):
+    # -- S10/S15: land the ingestable tables concurrently --------------------
+    def land(table: str, thunk: Callable[[], DataFrame]) -> tuple[str, str, int, StructType]:
         df = thunk()
         if table == "DataProperties":
             df = rename_dotted_columns(df)  # S11, main.py:170-180
@@ -93,8 +100,25 @@ def process_dataset(
             file_name,
             load_date=load_date,
         )
-        files[file_name] = path
-        row_counts[file_name] = int(obs.get["rows"])
+        return file_name, path, int(obs.get["rows"]), df.schema
+
+    todo = sorted(ingest_tables(dict(tables)).items())
+    workers = max(1, min(len(todo), spark.sparkContext.defaultParallelism))
+    with ThreadPoolExecutor(workers) as pool:
+        # One wrapper per task: each wrap clones the caller's local
+        # properties (job group, ...), so concurrent jobs never share one
+        # Properties object (a job sets its SQL execution id in it).
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(land), table, thunk)
+            for table, thunk in todo
+        ]
+        wait(futures, return_when=FIRST_EXCEPTION)
+        pool.shutdown(cancel_futures=True)
+    # Tasks start in submission order, so a failed task comes before any
+    # cancelled one: result() re-raises the first failure in table order.
+    landed = [f.result() for f in futures]
+    files = {file_name: path for file_name, path, _, _ in landed}
+    row_counts = {file_name: rows for file_name, _, rows, _ in landed}
 
     # -- S13/S14: side files --------------------------------------------------
     md.write_metadata(metadata, meta_dir, source, odata_version, dataset_id)
@@ -117,13 +141,13 @@ def process_dataset(
         ns = cat.namespace_name(source, odata_version, dataset_id)
         result.namespace = ns
         result.tables = cat.register_dataset_tables(
-            spark, ns, files, description=metadata.get("ShortDescription")
+            spark,
+            ns,
+            files,
+            {file_name: schema for file_name, _, _, schema in landed},
+            description=metadata.get("ShortDescription"),
+            column_descriptions=column_descriptions,
         )
-        main_tables = [t for t in result.tables if t.endswith("_TypedDataSet")]
-        if column_descriptions and main_tables:
-            cat.patch_column_descriptions(
-                spark, ns, main_tables[0], column_descriptions
-            )
     return result
 
 
@@ -133,8 +157,9 @@ def run_datasets(
     **kwargs,
 ) -> list[DatasetResult]:
     """Batch driver over independent datasets (reference S26 CLI loop,
-    ``cli.py:78-86``) — sequential here; datasets are independent, so a
-    deployment can fan them out as separate Spark jobs."""
+    ``cli.py:78-86``). Datasets run one after another; within each,
+    ``process_dataset`` lands the tables concurrently, up to one job per
+    core."""
     return [
         process_dataset(spark, ds_id, tables, metadata, **kwargs)
         for ds_id, (tables, metadata) in datasets.items()

@@ -57,7 +57,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 import statline_bq_spark.sources.odata as _odata
-from statline_bq_spark.sources.odata import page_size, plan_page_urls
+from statline_bq_spark.sources.odata import plan_page_urls
 
 try:  # ship this source by value to executor Python workers
     from pyspark import cloudpickle as _cp
@@ -242,8 +242,3 @@ class ODataDataSource(DataSource):
 
     def simpleStreamReader(self, schema: StructType) -> ODataStreamReader:
         return ODataStreamReader(schema, dict(self.options))
-
-
-def page_size_for(version: str) -> int:
-    """Re-export for callers sizing ingest batches (10k v3 / 100k v4)."""
-    return page_size(version)

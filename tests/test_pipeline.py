@@ -68,12 +68,23 @@ def test_incremental_skip_and_force(spark, tmp_path, dataset):
     assert not fourth.skipped
 
 
+def _bare(schema):
+    """(name, type, nullable) per field: the schema with comments and
+    other field metadata left out."""
+    return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+
 def test_catalog_endpoint_registers_tables(spark, tmp_path, dataset):
     tables, metadata = dataset
     res = process_dataset(
         spark, "T1", tables, metadata,
         storage_root=str(tmp_path), endpoint="catalog", load_date="20240101",
-        column_descriptions={"n_name": "nation name"},
+        column_descriptions={
+            "n_name": "nation\r\n name",
+            "n_regionkey": "x" * 2000,
+            "n_nationkey": None,
+            "absent_col": "ignored",
+        },
     )
     assert res.namespace == "cbs_v3_T1"
     assert sorted(res.tables) == [
@@ -82,7 +93,58 @@ def test_catalog_endpoint_registers_tables(spark, tmp_path, dataset):
     tbl = spark.table("cbs_v3_T1.T1_TypedDataSet")
     assert tbl.count() == 25
     comments = {f.name: f.metadata.get("comment") for f in tbl.schema.fields}
-    assert comments["n_name"] == "nation name"
+    assert comments["n_name"] == "nation name"  # CR/LF stripped
+    assert comments["n_regionkey"] == "x" * 1020 + "..."
+    assert comments["n_nationkey"] is None
+    # registered from the landed schema: identical to what the files hold,
+    # including DataProperties' renamed columns; only the main table is
+    # commented
+    for file_name, path in res.files.items():
+        table = spark.table(f"cbs_v3_T1.{file_name.split('.')[2]}")
+        assert _bare(table.schema) == _bare(spark.read.parquet(path).schema)
+        if not file_name.endswith("_TypedDataSet"):
+            assert not any("comment" in f.metadata for f in table.schema.fields)
+    dp = spark.table("cbs_v3_T1.T1_DataProperties")
+    assert dp.columns == ["odata_type", "Key_Name", "Description"]
+    spark.sql("DROP DATABASE IF EXISTS cbs_v3_T1 CASCADE")
+
+
+def test_landing_jobs_run_under_the_callers_job_group(spark, tmp_path, dataset):
+    """Tables land from a thread pool, and every landing job still carries
+    the caller's job group: no job of the call runs outside it."""
+    tables, metadata = dataset
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pipeline-land-T1", "landing under one job group")
+    try:
+        res = process_dataset(
+            spark, "T1", tables, metadata,
+            storage_root=str(tmp_path), endpoint="local", load_date="20240101",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(res.files) == 3
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert len(tracker.getJobIdsForGroup("pipeline-land-T1")) >= len(res.files)
+
+
+def test_failed_table_lands_no_metadata_and_registers_nothing(spark, tmp_path, dataset):
+    """One failing table fails the call after the other writes finish:
+    no metadata side file, no namespace, and the rerun is not skipped."""
+    tables, metadata = dataset
+    broken = dict(tables, Regio=lambda: (_ for _ in ()).throw(RuntimeError("page 3 failed")))
+    kwargs = dict(storage_root=str(tmp_path), endpoint="catalog", load_date="20240101")
+    spark.sql("DROP DATABASE IF EXISTS cbs_v3_T1 CASCADE")
+    with pytest.raises(RuntimeError, match="page 3 failed"):
+        process_dataset(spark, "T1", broken, metadata, **kwargs)
+    assert not list(tmp_path.rglob("*_Metadata.json"))
+    assert not spark.catalog.databaseExists("cbs_v3_T1")
+
+    rerun = process_dataset(spark, "T1", tables, metadata, **kwargs)
+    assert not rerun.skipped
+    assert sorted(rerun.tables) == ["T1_DataProperties", "T1_Regio", "T1_TypedDataSet"]
     spark.sql("DROP DATABASE IF EXISTS cbs_v3_T1 CASCADE")
 
 

@@ -133,28 +133,80 @@ def test_ndjson_all_null_column_degrades_to_string(spark, tmp_path):
 
 # --- catalog (S20/S21/S22) --------------------------------------------------
 
+def _bare(schema):
+    return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+
 def test_catalog_register_and_comment(spark, tmp_path):
-    df = spark.range(3).selectExpr("id AS k", "id * 2 AS v")
+    df = spark.range(3).selectExpr(
+        "id AS k", "id * 2 AS v", "named_struct('a b', id, 'c', array(id)) AS s",
+        "map('x', CAST(id AS DOUBLE)) AS m",
+    )
     path = str(tmp_path / "t.parquet")
     df.write.parquet(path)
+    side = str(tmp_path / "side.parquet")
+    df.select("k").write.parquet(side)
     ns = "cbs_v3_TEST1"
-    files = {"cbs.v3.TEST1_TypedDataSet": path}
-    tables = cat.register_dataset_tables(spark, ns, files, description="demo")
-    assert tables == ["TEST1_TypedDataSet"]
-    assert spark.table(f"{ns}.TEST1_TypedDataSet").count() == 3
-    # idempotent: registering again recreates cleanly (S20 drop-cascade)
-    tables = cat.register_dataset_tables(spark, ns, files)
-    assert tables == ["TEST1_TypedDataSet"]
-    n = cat.patch_column_descriptions(
-        spark, ns, "TEST1_TypedDataSet", {"k": "key col", "v": "x" * 2000, "zz": "absent"}
+    files = {"cbs.v3.TEST1_TypedDataSet": path, "cbs.v3.TEST1_X_TypedDataSet": side}
+    descriptions = {"k": "key\r\ncol", "v": "x" * 2000, "s": None, "zz": "absent"}
+    # declared from the landed schema (NOT NULL `k` is declared nullable,
+    # as Parquet reads it back) ...
+    schemas = {"cbs.v3.TEST1_TypedDataSet": df.schema,
+               "cbs.v3.TEST1_X_TypedDataSet": df.select("k").schema}
+    tables = cat.register_dataset_tables(
+        spark, ns, files, schemas, description="demo", column_descriptions=descriptions,
     )
-    assert n == 2
-    comments = {
-        f.name: f.metadata.get("comment")
-        for f in spark.table(f"{ns}.TEST1_TypedDataSet").schema.fields
+    assert tables == ["TEST1_TypedDataSet", "TEST1_X_TypedDataSet"]
+    assert spark.table(f"{ns}.TEST1_TypedDataSet").count() == 3
+    for file_name, table in zip(sorted(files), tables):
+        registered = spark.table(f"{ns}.{table}").schema
+        assert _bare(registered) == _bare(spark.read.parquet(files[file_name]).schema)
+
+    def comments(table):
+        return {f.name: f.metadata.get("comment") for f in spark.table(f"{ns}.{table}").schema.fields}
+
+    # ... with only the first *_TypedDataSet table commented
+    assert comments("TEST1_TypedDataSet") == {
+        "k": "keycol", "v": "x" * 1020 + "...", "s": None, "m": None,
     }
-    assert comments["k"] == "key col"
-    assert comments["v"].endswith("...") and len(comments["v"]) == 1023
+    assert comments("TEST1_X_TypedDataSet") == {"k": None}
+    # idempotent: registering again recreates cleanly (S20 drop-cascade)
+    tables = cat.register_dataset_tables(
+        spark, ns, {"cbs.v3.TEST1_TypedDataSet": path}, schemas
+    )
+    assert tables == ["TEST1_TypedDataSet"]
+    assert comments("TEST1_TypedDataSet") == dict.fromkeys("kvsm")
+    n = cat.patch_column_descriptions(spark, ns, "TEST1_TypedDataSet", descriptions)
+    assert n == 2
+    assert comments("TEST1_TypedDataSet") == {
+        "k": "keycol", "v": "x" * 1020 + "...", "s": None, "m": None,
+    }
+    spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
+
+
+def test_catalog_sql_literals_round_trip(spark, tmp_path):
+    """Comments, the database comment and the location reach the catalog
+    verbatim: quotes, backslash sequences, a trailing backslash and a
+    ``${...}`` variable reference are not reinterpreted by the parser."""
+    root = tmp_path / "it's here"
+    path = str(root / "t.parquet")
+    spark.range(2).selectExpr("id AS k", "id AS v").write.parquet(path)
+    ns = "cbs_v3_TEST2"
+    text = {"k": "it's C:\\temp\\new", "v": "ends in \\"}
+    cat.register_dataset_tables(
+        spark, ns, {"cbs.v3.TEST2_TypedDataSet": path},
+        {"cbs.v3.TEST2_TypedDataSet": spark.read.parquet(path).schema},
+        description="owner's ${spark.app.name} set", column_descriptions=text,
+    )
+    assert spark.catalog.getDatabase(ns).description == "owner's ${spark.app.name} set"
+    tbl = spark.table(f"{ns}.TEST2_TypedDataSet")
+    assert tbl.count() == 2
+    assert {f.name: f.metadata["comment"] for f in tbl.schema.fields} == text
+    assert cat.patch_column_descriptions(
+        spark, ns, "TEST2_TypedDataSet", {"k": "tab\\t'"}
+    ) == 1
+    comment = spark.table(f"{ns}.TEST2_TypedDataSet").schema["k"].metadata["comment"]
+    assert comment == "tab\\t'"
     spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
 
 
