@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from statline_bq_spark.sqltext import sql_literal
+
 #: Small deterministic English stopword list used for ratio features.
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
@@ -108,7 +110,7 @@ def stopword_ratio_sql(
     """SQL-text twin of :func:`stopword_ratio` (same ASCII-fold membership
     and NULL-safe sizes; double division is bit-identical)."""
     toks = tokens_sql(col)
-    members = ", ".join(f"'{s}'" for s in stopwords)
+    members = ", ".join(sql_literal(s) for s in stopwords)
     stops = safe_size_sql(
         f"filter({toks}, t -> {ascii_fold_sql('t')} IN ({members}))"
     )

@@ -12,6 +12,9 @@ Two layers:
   scans), the right way to get row counts / quality stats out of a 100 TB
   job without running it twice. Metrics land in an ``Observation`` after
   any action on the returned DataFrame.
+
+``codegen_compilations`` reads the JVM's whole-stage-codegen compile
+counter, a count that host load cannot distort.
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ import time
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 logger = logging.getLogger("statline_bq_spark")
@@ -87,3 +90,15 @@ def timed(step: str) -> Iterator[None]:
         logger.exception("%s failed after %.3fs", step, time.perf_counter() - t0)
         raise
     logger.info("%s ok in %.3fs", step, time.perf_counter() - t0)
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Generated classes the JVM has compiled since it started.
+
+    Reads the count of Spark's ``CodegenMetrics`` compilation-time
+    histogram, which gets one sample per Janino compile, i.e. per miss of
+    the whole-stage codegen cache. The counter is one per JVM, so callers
+    take the difference around the work they measure.
+    """
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

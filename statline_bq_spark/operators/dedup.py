@@ -104,11 +104,11 @@ def _shingle_sets(
     # Expression-batched construction (round 12, guide §1/§7.1 driver
     # floor): each F.* Column call is a py4j round trip (~0.5 ms), and
     # this subtree is rebuilt by every dedup query — SQL strings via
-    # selectExpr build the IDENTICAL expression tree in one round trip
+    # selectExpr build an equivalent expression tree in one round trip
     # per projection. Literal typing checked: SQL integer literals are
     # IntegerType exactly like F.lit(int), '' is StringType, and the
     # window-spec text resolves to the same WindowSpecDefinition, so
-    # plans and results are byte-identical (snapshot-verified).
+    # plans are semantically identical (output-snapshot-verified).
     toks = (
         df.selectExpr(f"`{id_col}` AS _id", f"`{text_col}` AS _t")
         .selectExpr("_id", "_t", "monotonically_increasing_id() AS _rid")
@@ -135,43 +135,6 @@ def _shingle_sets(
         f"{completeness} AS _ok",
     ).filter(F.col("_ok"))
     return grams.groupBy("_id").agg(F.collect_set("_g").alias("_gs"))
-
-
-def token_shingles(text_col: Column | str, n: int = 3) -> Column:
-    """Distinct token n-grams of a text column as array<string>.
-
-    Pure higher-order expression: tokenize, slide a window of ``n`` via
-    ``sequence`` + ``slice``, join with spaces, distinct.
-
-    Column-level form for callers that need the shingles as an array value;
-    the hot paths use the exploded ``shingle_index`` instead (higher-order
-    array functions are interpreted, not codegen'd).
-    """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = F.split(F.trim(c), "\\s+")
-    # Guard: sequence(1, 0) would DESCEND ([1, 0]) for docs shorter than n
-    # tokens — emit an empty shingle set instead.
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
-def hashed_shingles(text_col: Column | str, n: int = 3) -> Column:
-    """Distinct token n-grams hashed to 64-bit longs.
-
-    All downstream set math (minhash permutations, Jaccard intersections,
-    inverted-index joins) runs over these longs instead of the shingle
-    strings — one string hash per shingle total, then cheap long ops, and
-    shuffles carry 8-byte keys instead of ~20-byte strings. Collision
-    probability is ~|shingles|²/2⁶⁴ — negligible at any realistic corpus
-    size per partition-of-work.
-    """
-    return F.transform(token_shingles(text_col, n), lambda s: F.xxhash64(s))
 
 
 # --------------------------------------------------------------------------
@@ -217,26 +180,6 @@ def exact_dedup(
 # --------------------------------------------------------------------------
 # MinHash + LSH
 # --------------------------------------------------------------------------
-
-def minhash_signature(
-    shingles: Column, num_perm: int = 32
-) -> Column:
-    """array<bigint> of ``num_perm`` min-hashes over *hashed* shingles.
-
-    Permutation i is simulated by rehashing each shingle's 64-bit hash with
-    seed i (``xxhash64(i, h)`` — 12 bytes of input, far cheaper than
-    rehashing the shingle string num_perm times); the signature element is
-    the min over shingles. ANSI-safe: no overflowing multiply-shift tricks.
-    """
-    def seeded_min(seed: int) -> Column:
-        # one-arg lambda on purpose: a two-arg lambda would be interpreted
-        # by Spark as (element, index)
-        return F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(F.lit(seed), s))
-        )
-
-    return F.array(*[seeded_min(i) for i in range(num_perm)])
-
 
 def minhash_lsh_pairs(
     df: DataFrame,

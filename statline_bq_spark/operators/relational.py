@@ -26,15 +26,6 @@ def filtered_slice(df: DataFrame, *predicates: Column) -> DataFrame:
     return out
 
 
-def grouped_agg(
-    df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]
-) -> DataFrame:
-    """Hash aggregation over dimension keys (reference Q6). Spark performs
-    map-side partial aggregation automatically; one shuffle on the group
-    keys is the scale floor for exact results."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def top_k(
     df: DataFrame, order: Sequence[Column], k: int
 ) -> DataFrame:

@@ -632,32 +632,6 @@ def centroids_by_label(
     )
 
 
-def _centroid_vectors(
-    df: DataFrame, *, label_col: str = "label", vec_col: str = "embedding"
-) -> DataFrame:
-    """(label, _cvec: array<double>) — per-label mean vectors, assembled from
-    the long-form centroids without any driver-side collect.
-
-    Usable vectors only: ONE NaN-component vector would poison its whole
-    label's centroid, and a NaN column in the assignment matmul wins
-    np.argmax (NaN compares as the maximum) — every corpus row would
-    route to the poisoned inverted list, collapsing the IVF partitioning
-    into one catastrophically skewed list. Found by the round-7
-    poisoned-centroid probe (the numpy divide warning was the tell)."""
-    long = centroids_by_label(
-        _drop_null_vectors(df, vec_col),
-        label_col=label_col,
-        vec_col=vec_col,
-        round_to=6,
-    )
-    return long.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "centroid_val"))),
-            lambda s: s["centroid_val"],
-        ).alias("_cvec")
-    )
-
-
 def _assign_nearest_literal(
     df: DataFrame,
     labeled_centroids: list[tuple],
@@ -1354,12 +1328,12 @@ def ivf_topk(
     # its nearest NON-NULL-label centroid.
     #
     # The LONG form (label, pos, centroid_val) is collected and the
-    # vectors assembled driver-side (round 12): the previous
-    # _centroid_vectors re-aggregation (groupBy(label) + collect_list +
-    # array_sort + transform) added a second exchange to the codebook
-    # job only to reshape nlist×dim tiny rows the driver is about to
-    # collect anyway — same values (pos-sorted, round-6 means over
-    # usable vectors), one exchange fewer in the blocking collect.
+    # vectors assembled driver-side: re-aggregating it into per-label
+    # arrays would add a second exchange to the codebook job only to
+    # reshape nlist×dim tiny rows the driver collects anyway. Usable
+    # vectors only: one NaN-component vector would poison its label's
+    # centroid, and a NaN column wins np.argmax, routing every corpus
+    # row to that one inverted list.
     by_label: dict[int, dict[int, float]] = {}
     for r in centroids_by_label(
         _drop_null_vectors(corpus, vec_col),

@@ -20,7 +20,7 @@ Namespace naming follows the reference: ``{source}_{vN}_{id}``
 ``{source}.{vN}.{id}_{table}`` (``gcpl.py:589``).
 
 Every identifier goes into the SQL text backtick-quoted and every string
-(comments, locations) as a literal built by ``_sql_literal``.
+(comments, locations) as a literal built by ``sqltext.sql_literal``.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from statline_bq_spark.functions.cleaning import DESCRIPTION_MAX_CHARS
+from statline_bq_spark.sqltext import sql_literal
 
 
 def namespace_name(source: str, odata_version: str, dataset_id: str) -> str:
@@ -48,7 +49,7 @@ def recreate_namespace(
 ) -> None:
     """Idempotent drop-cascade + create (reference S20)."""
     spark.sql(f"DROP DATABASE IF EXISTS {_ident(namespace)} CASCADE")
-    comment = f" COMMENT {_sql_literal(description)}" if description else ""
+    comment = f" COMMENT {sql_literal(description)}" if description else ""
     spark.sql(f"CREATE DATABASE {_ident(namespace)}{comment}")
 
 
@@ -67,12 +68,12 @@ def register_external_table(
     comments = comments or {}
     cols = ", ".join(
         f"{_ident(f.name)} {_type_sql(f.dataType)}"
-        + (f" COMMENT {_sql_literal(comments[f.name])}" if f.name in comments else "")
+        + (f" COMMENT {sql_literal(comments[f.name])}" if f.name in comments else "")
         for f in schema.fields
     )
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {_ident(namespace)}.{_ident(table)} ({cols}) "
-        f"USING PARQUET LOCATION {_sql_literal(parquet_path)}"
+        f"USING PARQUET LOCATION {sql_literal(parquet_path)}"
     )
 
 
@@ -123,7 +124,7 @@ def patch_column_descriptions(
     comments = _column_comments(spark.table(name).schema.names, descriptions, max_chars)
     for col, comment in comments.items():
         spark.sql(
-            f"ALTER TABLE {name} ALTER COLUMN {_ident(col)} COMMENT {_sql_literal(comment)}"
+            f"ALTER TABLE {name} ALTER COLUMN {_ident(col)} COMMENT {sql_literal(comment)}"
         )
     return len(comments)
 
@@ -151,14 +152,6 @@ def _column_comments(
 
 def _ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
-
-
-def _sql_literal(s: str) -> str:
-    """Quoted Spark SQL string literal that parses back to ``s``: the parser
-    unescapes backslashes, and ``${`` would be taken for a variable
-    reference, so ``\\``, ``'`` and ``{`` after ``$`` are escaped."""
-    body = s.replace("\\", "\\\\").replace("'", "\\'").replace("${", "$\\{")
-    return f"'{body}'"
 
 
 def _type_sql(dt: DataType) -> str:

@@ -108,11 +108,6 @@ def _nan_null(col: F.Column | str) -> F.Column:
     )
 
 
-#: Oracle-side mirror of :func:`_nan_null` (DuckDB SQL fragment).
-def _sql_nan_null(expr: str) -> str:
-    return f"CASE WHEN NOT isfinite({expr}) THEN NULL ELSE {expr} END"
-
-
 #: Quantization domain for money measures: DECIMAL(20,6) holds
 #: |x| < 1e14. A finite double outside it is as unusable as NaN/Inf —
 #: Spark's ANSI decimal cast THROWS on it (NUMERIC_VALUE_OUT_OF_RANGE),

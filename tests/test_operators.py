@@ -1789,6 +1789,24 @@ def test_stopword_fold_is_ascii_only(spark):
     }, got
 
 
+def test_stopword_ratio_twins_agree_on_quoted_stopwords(spark):
+    """A custom stopword holding a quote (``don't``) goes into the SQL twin
+    as an escaped literal: unescaped, it ended the string early and broke
+    the expression."""
+    from statline_bq_spark.functions.text import stopword_ratio, stopword_ratio_sql
+
+    stops = ("don't", "the")
+    df = spark.createDataFrame(
+        [("Don't stop the music",), ("dont THE don't",), ("no stopwords",)],
+        "text string",
+    )
+    rows = df.select(
+        stopword_ratio("text", stops).alias("col"),
+        F.expr(stopword_ratio_sql("text", stops)).alias("sql"),
+    ).collect()
+    assert [(r.col, r.sql) for r in rows] == [(0.5, 0.5), (2 / 3, 2 / 3), (0.0, 0.0)]
+
+
 def test_kmeans_parallel_tiny_corpus_pads_to_k(spark):
     """k larger than the distinct-vector count: the k-means|| pool cycles
     its candidates so the codebook still has exactly k rows (duplicate
