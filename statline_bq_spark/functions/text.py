@@ -1,10 +1,17 @@
-"""Text-analysis column expressions for the LLM-data-pipeline surface.
+"""Text-analysis expressions for the LLM-data-pipeline surface.
 
 North-star operators (BASELINE.json): token counting, quality scoring,
 language identification — all as built-in-function expressions (split /
 regexp / higher-order array functions) that stay inside whole-stage codegen.
 At 100 TB these run embarrassingly parallel over parquet partitions with no
 shuffle at all.
+
+Each expression is defined once, as a ``*_sql`` function returning Spark
+SQL text: call sites batch it into ``selectExpr``/``F.expr``, so a projection
+costs one py4j round trip instead of one per expression node. The Column
+forms at the bottom are ``F.expr`` over the same function, so the two can
+never drift. Every argument is a column name or SQL fragment (``str``);
+backtick-quote names that need it.
 """
 
 from __future__ import annotations
@@ -21,40 +28,28 @@ _ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 _ASCII_LOWER = "abcdefghijklmnopqrstuvwxyz"
 
 
-def ascii_fold(col: Column | str) -> Column:
+def ascii_fold_sql(col: str) -> str:
     """ASCII-only case fold: [A-Z] → [a-z], every other codepoint untouched.
 
     Full Unicode case mapping is locale/context-sensitive AND
     engine-divergent — Java (Spark) lowers 'İ' to 'i̇' (i + combining dot)
-    where utf8proc (DuckDB) gives plain 'i', so under full lower() the
-    Turkish 'İN' IS the ASCII stopword 'in' on one engine and isn't on
-    the other (round-10 locale fixture; it falsified the round-6 claim
-    that a non-ASCII token can never fold into an ASCII stopword). A
-    reproducible pipeline matches ASCII word lists with an ASCII fold —
+    and maps a final 'Σ' to 'ς', where utf8proc (DuckDB) gives plain 'i'
+    and 'σ', so under full lower() the Turkish 'İN' IS the ASCII stopword
+    'in' on one engine and isn't on the other (round-10 locale fixture; it
+    falsified the round-6 claim that a non-ASCII token can never fold into
+    an ASCII stopword). A reproducible pipeline folds tokens that land in
+    compared output, and matches ASCII word lists, with an ASCII fold —
     deterministic on every engine and every locale; translate() is
-    per-codepoint in both engines.
+    per-codepoint in both engines, so the same text is also the DuckDB
+    oracles' fold.
     """
-    return F.translate(_col(col), _ASCII_UPPER, _ASCII_LOWER)
-
-#: Marker words for the rule-based language-ID heuristic. Deterministic and
-#: SQL-expressible — a stand-in for an n-gram model; the per-language marker
-#: lists are the tunable surface.
-LANG_MARKERS = {
-    "de": (" der ", " und ", " die ", " nicht "),
-    "es": (" el ", " los ", " una ", " que "),
-    "fr": (" le ", " les ", " une ", " est "),
-    "nl": (" het ", " een ", " niet ", " van "),
-}
+    return f"translate({col}, '{_ASCII_UPPER}', '{_ASCII_LOWER}')"
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def safe_size(col: Column | str) -> Column:
+def safe_size_sql(arr: str) -> str:
     """NULL-safe array length: a NULL array is NULL in EVERY session mode.
 
-    Plain ``F.size`` returns -1 for NULL input when
+    Plain ``size`` returns -1 for NULL input when
     ``spark.sql.ansi.enabled`` is false (the legacy ``sizeOfNull``
     behavior every Spark 3.x cluster defaults to) — and the driver owns
     the session, so the engine may not assume either mode. Found by the
@@ -72,115 +67,57 @@ def safe_size(col: Column | str) -> Column:
     hoisted and shared: measured 0.50s → 0.33s on a two-feature sf0.1
     token projection, identical outputs.
     """
-    return F.nullif(F.size(_col(col)), F.lit(-1))
-
-
-def tokens(col: Column | str) -> Column:
-    """Whitespace tokenization → array<string>."""
-    return F.split(F.trim(_col(col)), "\\s+")
-
-
-# -- SQL-text twins (round 12 driver-floor batching) -----------------------
-# Each *_sql function returns the SQL TEXT of its Column twin: parsed in
-# ONE py4j round trip at the call site (F.expr/selectExpr) where the
-# Column form pays one gateway call per expression node. Literal typing
-# matches exactly (D-suffix == F.lit(float), bare ints == F.lit(int),
-# nullif/size/translate/IN are the same functions). Args are raw SQL
-# fragments — pre-backtick column names that need it.
-
-
-def tokens_sql(col: str) -> str:
-    """SQL-text twin of :func:`tokens`."""
-    return f"split(trim({col}), '\\\\s+')"
-
-
-def safe_size_sql(arr: str) -> str:
-    """SQL-text twin of :func:`safe_size`."""
     return f"nullif(size({arr}), -1)"
 
 
-def ascii_fold_sql(col: str) -> str:
-    """SQL-text twin of :func:`ascii_fold`."""
-    return f"translate({col}, '{_ASCII_UPPER}', '{_ASCII_LOWER}')"
+def tokens_sql(col: str) -> str:
+    """Whitespace tokenization → array<string>. Empty/whitespace text
+    yields a single '' token; NULL text yields NULL."""
+    return f"split(trim({col}), '\\\\s+')"
+
+
+def token_count_sql(col: str) -> str:
+    """Number of whitespace-delimited tokens (NULL text → NULL)."""
+    return safe_size_sql(tokens_sql(col))
+
+
+def stopword_count_sql(
+    toks: str, stopwords: tuple[str, ...] = STOPWORDS
+) -> str:
+    """Number of elements of the token array ``toks`` that are stopwords
+    after :func:`ascii_fold_sql` (NULL array → NULL)."""
+    members = ", ".join(sql_literal(s) for s in stopwords)
+    return safe_size_sql(
+        f"filter({toks}, t -> {ascii_fold_sql('t')} IN ({members}))"
+    )
 
 
 def stopword_ratio_sql(
     col: str, stopwords: tuple[str, ...] = STOPWORDS
 ) -> str:
-    """SQL-text twin of :func:`stopword_ratio` (same ASCII-fold membership
-    and NULL-safe sizes; double division is bit-identical)."""
+    """Fraction of tokens that are stopwords (higher-order ``filter``, no UDF).
+
+    Membership folds case via :func:`ascii_fold_sql`, not full lower():
+    the stopword list is ASCII, and full Unicode lowering is
+    engine-divergent exactly at the tokens that fold INTO the list ('İN' →
+    'in' under utf8proc but 'i̇n' under Java — round-10 locale fixture).
+
+    Consequence for CUSTOM ``stopwords`` (ADVICE r10): because the token
+    is ascii-folded before membership, a non-ASCII stopword entry (e.g.
+    'über') can never match a cased token ('Über' folds to 'uber', which
+    is not in the list). Custom lists must be ASCII, or pre-folded with
+    the same fold. Entries are escaped SQL literals, so quotes are safe.
+    """
     toks = tokens_sql(col)
-    members = ", ".join(sql_literal(s) for s in stopwords)
-    stops = safe_size_sql(
-        f"filter({toks}, t -> {ascii_fold_sql('t')} IN ({members}))"
-    )
     return (
-        f"CAST({stops} AS double) / CAST({safe_size_sql(toks)} AS double)"
+        f"CAST({stopword_count_sql(toks, stopwords)} AS double)"
+        f" / CAST({safe_size_sql(toks)} AS double)"
     )
 
 
 def quality_score_sql(
     col: str, min_tokens: int = 20, max_tokens: int = 1000
 ) -> str:
-    """SQL-text twin of :func:`quality_score` (0.5·x commutes bit-exactly,
-    so operand order differences cannot move the double result)."""
-    n = safe_size_sql(tokens_sql(col))
-    length_ok = (
-        f"CASE WHEN {n} BETWEEN {int(min_tokens)} AND {int(max_tokens)}"
-        " THEN 1.0D ELSE 0.0D END"
-    )
-    return f"0.5D * ({stopword_ratio_sql(col)}) + 0.5D * ({length_ok})"
-
-
-def script_char_count_sql(col: str, script: str) -> str:
-    """SQL-text twin of :func:`script_char_count`."""
-    return f"length(regexp_replace({col}, '[^{SCRIPT_RANGES[script]}]', ''))"
-
-
-def dominant_script_sql(col: str) -> str:
-    """SQL-text twin of :func:`dominant_script` (same fixed iteration
-    order and tie-break)."""
-    scripts = [s for s in SCRIPT_RANGES if s != "digit"]
-    best = (
-        "greatest("
-        + ", ".join(script_char_count_sql(col, s) for s in scripts)
-        + ")"
-    )
-    whens = " ".join(
-        f"WHEN ({script_char_count_sql(col, s)} = {best})"
-        f" AND ({best} > 0) THEN '{s}'"
-        for s in scripts
-    )
-    return f"CASE {whens} ELSE 'none' END"
-
-
-def token_count(col: Column | str) -> Column:
-    """Number of whitespace-delimited tokens (NULL text → NULL)."""
-    return safe_size(tokens(col))
-
-
-def stopword_ratio(col: Column | str, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    """Fraction of tokens that are stopwords (higher-order ``filter``, no UDF).
-
-    Membership folds case via :func:`ascii_fold`, not full lower(): the
-    stopword list is ASCII, and full Unicode lowering is engine-divergent
-    exactly at the tokens that fold INTO the list ('İN' → 'in' under
-    utf8proc but 'i̇n' under Java — round-10 locale fixture).
-
-    Consequence for CUSTOM ``stopwords`` (ADVICE r10): because the token
-    is ascii-folded before membership, a non-ASCII stopword entry (e.g.
-    'über') can never match a cased token ('Über' folds to 'uber', which
-    is not in the list). Custom lists must be ASCII, or pre-folded with
-    the same :func:`ascii_fold` transform.
-    """
-    toks = tokens(col)
-    stops = safe_size(
-        F.filter(toks, lambda t: ascii_fold(t).isin(*stopwords))
-    )
-    return stops.cast("double") / safe_size(toks).cast("double")
-
-
-def quality_score(col: Column | str, min_tokens: int = 20, max_tokens: int = 1000) -> Column:
     """Composite heuristic quality score in [0, 1].
 
     0.5 * stopword-ratio signal + 0.5 * length-window signal. The exact
@@ -188,30 +125,39 @@ def quality_score(col: Column | str, min_tokens: int = 20, max_tokens: int = 100
     expression over per-row features) is the scale-relevant part.
     """
     length_ok = (
-        F.when(token_count(col).between(min_tokens, max_tokens), F.lit(1.0))
-        .otherwise(F.lit(0.0))
+        f"CASE WHEN {token_count_sql(col)} BETWEEN {int(min_tokens)}"
+        f" AND {int(max_tokens)} THEN 1.0D ELSE 0.0D END"
     )
-    return 0.5 * stopword_ratio(col) + 0.5 * length_ok
+    return f"0.5D * ({stopword_ratio_sql(col)}) + 0.5D * ({length_ok})"
 
 
-def lang_id(col: Column | str, default: str = "en") -> Column:
+#: Marker words for the rule-based language-ID heuristic. Deterministic and
+#: SQL-expressible — a stand-in for an n-gram model; the per-language marker
+#: lists are the tunable surface.
+LANG_MARKERS = {
+    "de": (" der ", " und ", " die ", " nicht "),
+    "es": (" el ", " los ", " una ", " que "),
+    "fr": (" le ", " les ", " une ", " est "),
+    "nl": (" het ", " een ", " niet ", " van "),
+}
+
+
+def lang_id_sql(col: str, default: str = "en") -> str:
     """Rule-based language ID via marker-word hits.
 
     First language whose marker list hits wins; ties broken by the fixed
     iteration order of ``LANG_MARKERS``. SQL-expressible (chained CASE), so
-    oracle-checkable; swap for a real n-gram scorer behind the same column
+    oracle-checkable; swap for a real n-gram scorer behind the same
     signature.
     """
-    c = F.concat(F.lit(" "), F.lower(_col(col)), F.lit(" "))
-    expr: Column | None = None
-    for lang, markers in LANG_MARKERS.items():
-        hit = None
-        for m in markers:
-            cond = c.contains(m)
-            hit = cond if hit is None else (hit | cond)
-        expr = F.when(hit, F.lit(lang)) if expr is None else expr.when(hit, F.lit(lang))
-    assert expr is not None
-    return expr.otherwise(F.lit(default))
+    padded = f"concat(' ', lower({col}), ' ')"
+    whens = " ".join(
+        "WHEN "
+        + " OR ".join(f"contains({padded}, {sql_literal(m)})" for m in markers)
+        + f" THEN {sql_literal(lang)}"
+        for lang, markers in LANG_MARKERS.items()
+    )
+    return f"CASE {whens} ELSE {sql_literal(default)} END"
 
 
 #: BPE-ish pre-tokenization pattern (the GPT-2-style split classes, without
@@ -220,18 +166,18 @@ def lang_id(col: Column | str, default: str = "en") -> Column:
 BPE_SPLIT_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+"
 
 
-def bpe_ish_tokens(col: Column | str) -> Column:
+def bpe_ish_tokens_sql(col: str) -> str:
     """Subword-ish pre-tokens via regexp_extract_all — the class structure a
     BPE tokenizer splits on before merges. A real tokenizer's merge table
     would run as a Pandas UDF over these; the count is the scale-relevant
     per-row feature (sizing batches, cost estimation)."""
-    return F.regexp_extract_all(_col(col), F.lit(BPE_SPLIT_PATTERN), 0)
+    return f"regexp_extract_all({col}, {sql_literal(BPE_SPLIT_PATTERN)}, 0)"
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
+def bpe_ish_token_count_sql(col: str) -> str:
     """Number of BPE-ish pre-tokens (≥ whitespace token count by design;
     NULL text → NULL in every session mode)."""
-    return safe_size(bpe_ish_tokens(col))
+    return safe_size_sql(bpe_ish_tokens_sql(col))
 
 
 def chunk_words(
@@ -294,23 +240,73 @@ SCRIPT_RANGES = {
 }
 
 
-def script_char_count(col: Column | str, script: str) -> Column:
+def script_char_count_sql(col: str, script: str) -> str:
     """Number of characters of ``script`` (a SCRIPT_RANGES key) in the text:
     strip everything outside the range, count what's left. Pure JVM regexp —
     no shuffle, no Python."""
-    ranges = SCRIPT_RANGES[script]
-    return F.length(F.regexp_replace(_col(col), f"[^{ranges}]", ""))
+    return f"length(regexp_replace({col}, '[^{SCRIPT_RANGES[script]}]', ''))"
 
 
-def dominant_script(col: Column | str) -> Column:
+def dominant_script_sql(col: str) -> str:
     """The script with the most characters (fixed SCRIPT_RANGES iteration
     order breaks ties; 'none' when the text has no script characters at
     all). Integer comparisons only — deterministic in any engine."""
-    counts = {s: script_char_count(col, s) for s in SCRIPT_RANGES if s != "digit"}
-    best = F.greatest(*counts.values())
-    expr: Column | None = None
-    for name, cnt in counts.items():
-        cond = (cnt == best) & (best > 0)
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    assert expr is not None
-    return expr.otherwise(F.lit("none"))
+    scripts = [s for s in SCRIPT_RANGES if s != "digit"]
+    best = (
+        "greatest("
+        + ", ".join(script_char_count_sql(col, s) for s in scripts)
+        + ")"
+    )
+    whens = " ".join(
+        f"WHEN ({script_char_count_sql(col, s)} = {best})"
+        f" AND ({best} > 0) THEN '{s}'"
+        for s in scripts
+    )
+    return f"CASE {whens} ELSE 'none' END"
+
+
+# -- Column forms: one parsed expression each -------------------------------
+
+
+def ascii_fold(col: str) -> Column:
+    return F.expr(ascii_fold_sql(col))
+
+
+def safe_size(arr: str) -> Column:
+    return F.expr(safe_size_sql(arr))
+
+
+def tokens(col: str) -> Column:
+    return F.expr(tokens_sql(col))
+
+
+def token_count(col: str) -> Column:
+    return F.expr(token_count_sql(col))
+
+
+def stopword_ratio(col: str, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
+    return F.expr(stopword_ratio_sql(col, stopwords))
+
+
+def quality_score(col: str, min_tokens: int = 20, max_tokens: int = 1000) -> Column:
+    return F.expr(quality_score_sql(col, min_tokens, max_tokens))
+
+
+def lang_id(col: str, default: str = "en") -> Column:
+    return F.expr(lang_id_sql(col, default))
+
+
+def bpe_ish_tokens(col: str) -> Column:
+    return F.expr(bpe_ish_tokens_sql(col))
+
+
+def bpe_ish_token_count(col: str) -> Column:
+    return F.expr(bpe_ish_token_count_sql(col))
+
+
+def script_char_count(col: str, script: str) -> Column:
+    return F.expr(script_char_count_sql(col, script))
+
+
+def dominant_script(col: str) -> Column:
+    return F.expr(dominant_script_sql(col))

@@ -63,24 +63,6 @@ def lag_delta(
     return df.withColumn(alias, c - F.lag(c, offset).over(w))
 
 
-def moving_avg(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column | str],
-    value: Column | str,
-    *,
-    preceding: int = 3,
-    alias: str = "moving_avg",
-) -> DataFrame:
-    """Trailing moving average over the last ``preceding``+1 rows (ROWS frame)."""
-    w = (
-        Window.partitionBy(*partition_by)
-        .orderBy(*order_by)
-        .rowsBetween(-preceding, Window.currentRow)
-    )
-    return df.withColumn(alias, F.avg(value).over(w))
-
-
 def running_frame_avg(
     df: DataFrame,
     partition_by: Sequence[str],

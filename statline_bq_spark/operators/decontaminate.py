@@ -25,8 +25,10 @@ functions, which are interpreted per element).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from statline_bq_spark.functions.text import tokens
 
 
 def doc_ngram_strings(
@@ -61,9 +63,7 @@ def doc_ngram_strings(
     toks = base.select(
         "_id",
         "_rid",
-        F.posexplode(F.split(F.trim(F.col("_text")), "\\s+")).alias(
-            "_pos", "_tok"
-        ),
+        F.posexplode(tokens("_text")).alias("_pos", "_tok"),
     )
     w = Window.partitionBy("_rid").orderBy("_pos")
     leads = [F.lead("_tok", j).over(w) for j in range(1, n)]

@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from statline_bq_spark.functions.text import tokens, tokens_sql
+from statline_bq_spark.sqltext import sql_double
+
 #: Document-frequency cap of the capped-gram Jaccard universe. One
 #: constant on purpose: :func:`ngram_jaccard_pairs` (the exact truth),
 #: :func:`informative_doc_ids` (the comparable universe), and every
@@ -34,23 +37,6 @@ DEFAULT_DF_CAP = 128
 # --------------------------------------------------------------------------
 # shingling helpers (shared by minhash / jaccard)
 # --------------------------------------------------------------------------
-
-def shingle_sets(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """Per-document distinct gram-hash SETS: (_id, _gs: array<bigint>) —
-    the pre-explode form of :func:`shingle_index` (same pipeline, stopping
-    at the ``collect_set``). Consumers that need doc-level gram arrays
-    (e.g. the exact-Jaccard verify in :func:`minhash_lsh_pairs`) read this
-    directly instead of re-aggregating the exploded index back into
-    arrays (round 11: the explode → collect_list round trip was pure
-    rework riding the same partitioning)."""
-    return _shingle_sets(df, id_col=id_col, text_col=text_col, n=n)
-
 
 def shingle_index(
     df: DataFrame,
@@ -86,8 +72,10 @@ def shingle_index(
 def _shingle_sets(
     df: DataFrame, *, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    # implementation shared by shingle_sets / shingle_index; the design
-    # rationale lives in shingle_index's docstring.
+    # Per-document distinct gram-hash sets (_id, _gs: array<bigint>): the
+    # pre-explode form of shingle_index, which the exact-Jaccard verifies
+    # read directly (round 11: the explode → collect_list round trip was
+    # pure rework). The design rationale lives in shingle_index's docstring.
     # Duplicate-id safety WITHOUT a second exchange (round 8; the round-7
     # per-ROW-surrogate window partitioned by _rid, which cost an extra
     # full shuffle of the gram index because groupBy(_id) no longer rode
@@ -115,7 +103,7 @@ def _shingle_sets(
         .selectExpr(
             "_id",
             "_rid",
-            "posexplode(split(trim(_t), '\\\\s+')) AS (_pos, _tok)",
+            f"posexplode({tokens_sql('_t')}) AS (_pos, _tok)",
         )
     )
     over = "OVER (PARTITION BY _id ORDER BY _rid, _pos)"
@@ -209,6 +197,8 @@ def minhash_lsh_pairs(
     only candidate documents are ever re-touched — at 100 TB the verify
     cost is proportional to candidates, not corpus.
     """
+    # rendered first: a non-finite threshold fails before any job runs
+    thr = sql_double(jaccard_threshold)
     r = num_perm // bands
     docsets = None
     if shingles is not None:
@@ -338,7 +328,7 @@ def minhash_lsh_pairs(
         .selectExpr("a", "_y._id AS b", "_sa", "_y._sz AS _sb")
         .filter(
             "round(least(_sa, _sb) / greatest(_sa, _sb), 4)"
-            f" >= {float(jaccard_threshold)!r}D"
+            f" >= {thr}"
         )
         .select("a", "b")
         .distinct()
@@ -377,7 +367,7 @@ def minhash_lsh_pairs(
             f"round({common} / (size(_ga) + size(_gb) - {common}), 4)"
             " AS jaccard",
         )
-        .filter(f"jaccard >= {float(jaccard_threshold)!r}D")
+        .filter(f"jaccard >= {thr}")
         .select("a", "b", "jaccard")
     )
 
@@ -477,6 +467,8 @@ def ngram_jaccard_pairs(
     reach for this parameter only with a checkpointed/persisted index
     whose scan they've already paid.
     """
+    # rendered first: a non-finite threshold fails before any job runs
+    thr = sql_double(threshold)
     if shingles is not None:
         inv = shingles
     else:
@@ -565,7 +557,7 @@ def ngram_jaccard_pairs(
         "a", "_y._id AS b", "_sa", "_y._sz AS _sb"
     ).filter(
         "round(least(_sa, _sb) / greatest(_sa, _sb), 4)"
-        f" >= {float(threshold)!r}D"
+        f" >= {thr}"
     )
     # Sizes arrived with the pair, so one hash aggregate finishes the
     # query: group on (a, b) — _sa/_sb are functionally dependent, kept
@@ -582,7 +574,7 @@ def ngram_jaccard_pairs(
             "_sb",
             "round(common / (_sa + _sb - common), 4) AS jaccard",
         )
-        .filter(f"jaccard >= {float(threshold)!r}D")
+        .filter(f"jaccard >= {thr}")
         .select("a", "b", "jaccard")
     )
 
@@ -591,7 +583,7 @@ def ngram_jaccard_pairs(
 # SimHash
 # --------------------------------------------------------------------------
 
-def simhash64(text_col: Column | str) -> Column:
+def simhash64(text_col: str) -> Column:
     """64-bit SimHash fingerprint of whitespace tokens, as bigint.
 
     Classic construction: per token take xxhash64, add +1/-1 per bit into 64
@@ -599,8 +591,7 @@ def simhash64(text_col: Column | str) -> Column:
     higher-order expressions (aggregate over the token array into an
     array<int> of counters, then fold the counters into one bigint).
     """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = F.split(F.trim(c), "\\s+")
+    toks = tokens(text_col)
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
     # Literal bit masks (bit 63 is the sign bit in a signed long).
     masks = F.array(
@@ -667,7 +658,7 @@ def simhash_fingerprints(
         df.filter(F.col(id_col).isNotNull())
         .selectExpr(
             f"`{id_col}`",
-            f"explode(split(trim(`{text_col}`), '\\\\s+')) AS _tok",
+            f"explode({tokens_sql(f'`{text_col}`')}) AS _tok",
         )
         .selectExpr(f"`{id_col}`", "xxhash64(_tok) AS _h")
     )
@@ -903,9 +894,7 @@ def winnowing_fingerprints(
         .select(
             "_id",
             "_rid",
-            F.posexplode(F.split(F.trim(F.col("_t")), "\\s+")).alias(
-                "_pos", "_tok"
-            ),
+            F.posexplode(tokens("_t")).alias("_pos", "_tok"),
         )
     )
     w = Window.partitionBy("_rid").orderBy("_pos")

@@ -34,9 +34,11 @@ from statline_bq_spark.functions.vectors import (
     cosine_from_norms,
     cosine_from_norms_sql,
     cosine_similarity,
+    dot_sql,
     l2_norm,
     l2_norm_sql,
 )
+from statline_bq_spark.sqltext import sql_double
 
 
 def _drop_null_vectors(
@@ -390,20 +392,17 @@ def _hyperplanes(dim: int, bits: int, seed: int) -> list[list[float]]:
 def signature_expr(vec_col: str, planes: list[list[float]]):
     """Bit-signature expression: bit b = sign(vec · plane_b) ≥ 0.
 
-    Pure built-in fold per plane; planes ship as array literals.
+    Pure built-in fold per plane (``dot_sql``); planes ship as double
+    array literals.
     """
-    v = F.col(vec_col).cast("array<double>")
-    sig = F.lit(0).cast("bigint")
+    sig = "CAST(0 AS bigint)"
     for b, plane in enumerate(planes):
-        p = F.array(*[F.lit(x) for x in plane])
-        d = F.aggregate(
-            F.zip_with(v, p, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        p = "array(" + ", ".join(sql_double(x) for x in plane) + ")"
+        sig = (
+            f"({sig} | CASE WHEN {dot_sql(f'`{vec_col}`', p)} >= 0"
+            f" THEN CAST({1 << b} AS bigint) ELSE CAST(0 AS bigint) END)"
         )
-        mask = F.lit((1 << b)).cast("bigint")
-        sig = sig.bitwiseOR(F.when(d >= 0, mask).otherwise(F.lit(0).cast("bigint")))
-    return sig
+    return F.expr(sig)
 
 
 def _bucket_array(vec_col: str, all_planes: list[list[list[float]]]):
@@ -444,14 +443,14 @@ def lsh_bucket_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_c_vec"),
-        l2_norm(F.col(vec_col)).alias("_c_nrm"),
+        l2_norm(f"`{vec_col}`").alias("_c_nrm"),
         F.explode(_bucket_array(vec_col, all_planes)).alias("_b"),
     ).select("neighbor_id", "_c_vec", "_c_nrm", "_b.table_id", "_b.bucket")
     q = F.broadcast(
         queries.select(
             F.col(query_id_col).alias("q_id"),
             F.col(vec_col).alias("_q_vec"),
-            l2_norm(F.col(vec_col)).alias("_q_nrm"),
+            l2_norm(f"`{vec_col}`").alias("_q_nrm"),
             F.explode(_bucket_array(vec_col, all_planes)).alias("_b"),
         ).select("q_id", "_q_vec", "_q_nrm", "_b.table_id", "_b.bucket")
     )
@@ -465,9 +464,7 @@ def lsh_bucket_topk(
     )
     scored = candidates.withColumn(
         "_sim",
-        cosine_from_norms(
-            F.col("_c_vec"), F.col("_q_vec"), F.col("_c_nrm"), F.col("_q_nrm")
-        ),
+        cosine_from_norms("_c_vec", "_q_vec", "_c_nrm", "_q_nrm"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("_sim").desc(), F.col("neighbor_id"))
     return (
@@ -497,7 +494,7 @@ def cosine_pairs(
     b = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
     return (
         a.join(b, F.col("a") < F.col("b"))
-        .withColumn("sim", F.round(cosine_similarity(F.col("_va"), F.col("_vb")), 4))
+        .withColumn("sim", F.round(cosine_similarity("_va", "_vb"), 4))
         .filter(F.col("sim") >= threshold)
         .select("a", "b", "sim")
     )
@@ -558,12 +555,10 @@ def cosine_pairs_blocked(
     # expression tree as cosine_similarity, so values are bit-identical),
     # cutting per-candidate work from dot+2 norms to dot+divide — a
     # measured ~3x on the O(N^2) verify stage.
-    from statline_bq_spark.functions.vectors import dot, l2_norm
-
     left = df.select(
         F.col(id_col).alias("_xid"),
         F.col(vec_col).alias("_xv"),
-        l2_norm(F.col(vec_col)).alias("_xn"),
+        l2_norm(f"`{vec_col}`").alias("_xn"),
         F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(n_blocks))
         .cast("int")
         .alias("_xb"),
@@ -571,7 +566,7 @@ def cosine_pairs_blocked(
     right = df.select(
         F.col(id_col).alias("_yid"),
         F.col(vec_col).alias("_yv"),
-        l2_norm(F.col(vec_col)).alias("_yn"),
+        l2_norm(f"`{vec_col}`").alias("_yn"),
         F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(n_blocks))
         .cast("int")
         .alias("_yb"),
@@ -590,16 +585,9 @@ def cosine_pairs_blocked(
     return (
         cand.withColumn(
             "sim",
-            # try_divide, same as cosine_similarity: a zero-norm vector
-            # must yield NULL (dropped by the threshold filter below), not
-            # an ANSI DIVIDE_BY_ZERO that kills the job.
-            F.round(
-                F.try_divide(
-                    dot(F.col("_xv"), F.col("_yv")),
-                    F.col("_xn") * F.col("_yn"),
-                ),
-                4,
-            ),
+            # try_divide: a zero-norm vector yields NULL (dropped by the
+            # threshold filter below), not an ANSI DIVIDE_BY_ZERO
+            F.round(cosine_from_norms("_xv", "_yv", "_xn", "_yn"), 4),
         )
         .filter(F.col("sim") >= threshold)
         .select(
@@ -1699,18 +1687,13 @@ def ivf_index_topk(
     candidates = (
         # the corpus norm folds once per inverted-list row, pre-join
         lists.withColumnRenamed(vec_col, "_c_vec")
-        .withColumn("_c_nrm", l2_norm(F.col("_c_vec")))
+        .withColumn("_c_nrm", l2_norm("_c_vec"))
         .join(probes, "label")
         .filter(F.col("vec_id") != F.col("q_id"))
         .dropDuplicates(["q_id", "vec_id"])
         .withColumn(
             "_sim",
-            cosine_from_norms(
-                F.col("_c_vec"),
-                F.col("_q_vec"),
-                F.col("_c_nrm"),
-                F.col("_q_nrm"),
-            ),
+            cosine_from_norms("_c_vec", "_q_vec", "_c_nrm", "_q_nrm"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.col("_sim").desc(), F.col("vec_id"))

@@ -11,8 +11,7 @@ Reference semantics:
   two sides of that compare.
 
 Driver-side json (metadata is one small document — a DataFrame would be
-ceremony), matching the reference's design; the *queryable* metadata
-surface is `metadata_df`.
+ceremony), matching the reference's design.
 """
 
 from __future__ import annotations
@@ -20,7 +19,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from statline_bq_spark.functions.cleaning import clean_description
@@ -81,12 +80,6 @@ def read_metadata(path: str) -> dict | None:
         return None
     with open(path, encoding="utf-8") as f:
         return json.load(f)
-
-
-def metadata_df(spark: SparkSession, metadata: dict) -> DataFrame:
-    """The metadata document as a (single-row) DataFrame so it joins/filters
-    like any other table (schema-as-data, reference Q11)."""
-    return spark.createDataFrame([json.loads(json.dumps(metadata))])
 
 
 def column_descriptions_df(

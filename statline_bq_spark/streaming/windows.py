@@ -221,7 +221,7 @@ def neardup_filter_stream(
     from statline_bq_spark.operators.dedup import simhash64
 
     return (
-        docs.withColumn("_fp", simhash64(F.col(text_col)))
+        docs.withColumn("_fp", simhash64(f"`{text_col}`"))
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["_fp"])
         .drop("_fp")

@@ -23,15 +23,21 @@ from pyspark.sql import functions as F
 from statline_bq_spark.functions.cleaning import clean_description, clean_python_name
 from statline_bq_spark.functions import udtf as udtf_mod
 from statline_bq_spark.functions.text import (
+    ascii_fold_sql,
     bpe_ish_token_count,
     chunk_words,
     lang_id,
     quality_score,
+    quality_score_sql,
     safe_size,
-    stopword_ratio,
+    stopword_ratio_sql,
     token_count,
+    token_count_sql,
+    tokens,
+    tokens_sql,
 )
 from statline_bq_spark.io import read_table, register_views
+from statline_bq_spark.sqltext import sql_double
 from statline_bq_spark.functions import pii
 from statline_bq_spark.operators import (
     analytic,
@@ -296,33 +302,6 @@ def _finite_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         f" AND (NOT exists(`{vec_col}`, x -> (isnull(x) OR isnan(x))"
         " OR abs(x) = CAST('Infinity' AS DOUBLE)))"
     )
-
-
-_ASCII_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_ASCII_LOWER = "abcdefghijklmnopqrstuvwxyz"
-
-
-def _ascii_lower(col: F.Column | str) -> F.Column:
-    """ASCII-only case fold for token normalization that lands in compared
-    output. Full Unicode case mapping is locale/context-sensitive and
-    engine-divergent — Spark (Java) lower('İ') = 'i̇' (i + combining dot)
-    and maps a final 'Σ' to 'ς', while DuckDB (utf8proc) gives 'i' and 'σ'
-    — so a reproducible pipeline folds [A-Z] only and passes every other
-    codepoint through untouched. Found by the round-6 unicode dirty rows.
-    Oracle mirror: :func:`_sql_ascii_lower` (translate is per-codepoint in
-    both engines). Since round 10, stopword MEMBERSHIP also folds
-    ASCII-only (``text.ascii_fold``): the round-6 claim that a non-ASCII
-    token can never fold into an ASCII stopword was wrong — DuckDB's
-    simple mapping lowers Turkish 'İN' straight INTO 'in' while Java's
-    full mapping gives 'i̇n' (round-10 locale fixture caught it live in
-    quality_scores / calibrated_quality_scores).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.translate(c, _ASCII_UPPER, _ASCII_LOWER)
-
-
-def _sql_ascii_lower(expr: str) -> str:
-    return f"translate({expr}, '{_ASCII_UPPER}', '{_ASCII_LOWER}')"
 
 
 # ---------------------------------------------------------------------------
@@ -2562,8 +2541,8 @@ def q_vocab_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         # ASCII fold, not lower(): these tokens land in compared output
-        # (see _ascii_lower — Unicode case mapping is engine-divergent)
-        F.explode(F.split(F.trim(_ascii_lower("text")), r"\s+")).alias("tok"),
+        # (see text.ascii_fold_sql — Unicode case mapping is engine-divergent)
+        F.expr(f"explode({tokens_sql(ascii_fold_sql('text'))}) AS tok"),
     ).distinct()
     df_counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     return df_counts.orderBy(F.col("df").desc(), "tok").limit(100)
@@ -2573,7 +2552,7 @@ ORACLE_VOCAB_TOP_TERMS = f"""
 SELECT tok, count(*) AS df
 FROM (
   SELECT DISTINCT doc_id,
-         unnest(string_split_regex(trim({_sql_ascii_lower("text")}),
+         unnest(string_split_regex(trim({ascii_fold_sql("text")}),
                                    '\\s+')) AS tok
   FROM documents
 )
@@ -3001,33 +2980,36 @@ def q_matryoshka_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     engines. Zero shuffle: pure per-row JVM folds."""
     from statline_bq_spark.functions import vectors
 
-    emb = read_table(spark, sf, "embeddings")
-    head = vectors.truncate_dims("embedding", 16)
-    unit = vectors.l2_normalize(head)
+    # the head slice is projected once, then normed and normalized by name
+    emb = read_table(spark, sf, "embeddings").select(
+        "vec_id",
+        "embedding",
+        vectors.truncate_dims("embedding", 16).alias("_head"),
+    )
     fr = lambda c: F.floor(c * 10000 + F.lit(0.5)) / 10000  # noqa: E731
     # A non-finite component IN THE HEAD makes the row un-normalizable
     # (NaN poisons the norm, and Spark's NaN > 0 is TRUE while DuckDB's
     # is IEEE false — the guard must fire before the norm comparison);
     # components beyond the head don't matter to a matryoshka consumer.
     head_ok = ~F.exists(
-        head, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
+        "_head", lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf")))
     )
     return emb.select(
         "vec_id",
         # safe_size: legacy (ANSI-off) sessions read size(NULL) as -1
         safe_size("embedding").alias("full_dim"),
-        fr(F.when(head_ok, vectors.l2_norm(head))).alias("head_norm"),
+        fr(F.when(head_ok, vectors.l2_norm("_head"))).alias("head_norm"),
         # Un-normalizable rows (NULL embedding, zero-norm or non-finite
         # head) emit a NULL head_unit, not '': concat_ws silently drops
         # the all-NULL transform elements, which would disguise a dirty
         # row as an empty-but-present vector (and diverge from the
         # oracle's NULL).
         F.when(
-            head_ok & (vectors.l2_norm(head) > 0),
+            head_ok & (vectors.l2_norm("_head") > 0),
             F.concat_ws(
                 ",",
                 F.transform(
-                    unit,
+                    vectors.l2_normalize("_head"),
                     lambda x: F.floor(x * 10000 + F.lit(0.5))
                     .cast("bigint")
                     .cast("string"),
@@ -3200,11 +3182,9 @@ GROUP BY coalesce(md5(text), '_null:' || CAST(doc_id AS VARCHAR))
 
 
 def q_token_stats(spark: SparkSession, sf: str) -> DataFrame:
-    from statline_bq_spark.functions.text import safe_size_sql, tokens_sql
-
     d = read_table(spark, sf, "documents")
     # SQL-text form (round 12): identical trees, one round trip per column
-    n_tokens = f"CAST({safe_size_sql(tokens_sql('text'))} AS bigint)"
+    n_tokens = f"CAST({token_count_sql('text')} AS bigint)"
     n_chars_ns = "CAST(length(regexp_replace(text, '\\\\s', '')) AS bigint)"
     return d.selectExpr(
         "doc_id",
@@ -3226,18 +3206,11 @@ FROM documents
 
 
 def q_quality_scores(spark: SparkSession, sf: str) -> DataFrame:
-    from statline_bq_spark.functions.text import (
-        quality_score_sql,
-        safe_size_sql,
-        stopword_ratio_sql,
-        tokens_sql,
-    )
-
     d = read_table(spark, sf, "documents")
     # SQL-text form (round 12): identical trees, one round trip per column
     return d.selectExpr(
         "doc_id",
-        f"CAST({safe_size_sql(tokens_sql('text'))} AS bigint) AS n_tokens",
+        f"CAST({token_count_sql('text')} AS bigint) AS n_tokens",
         f"round({stopword_ratio_sql('text')}, 4) AS stop_ratio",
         f"round({quality_score_sql('text')}, 4) AS score",
     )
@@ -3903,7 +3876,7 @@ def q_price_percentiles(spark: SparkSession, sf: str) -> DataFrame:
             *[
                 F.expr(
                     "max(CASE WHEN _rn ="
-                    f" CAST(ceil(_n * {float(p)!r}D) AS int)"
+                    f" CAST(ceil(_n * {sql_double(p)}) AS int)"
                     f" THEN _v END) AS {alias}"
                 )
                 for p, alias in picks
@@ -4866,7 +4839,7 @@ def q_array_stats_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     )
     return emb.select(
         "vec_id",
-        safe_size(v).alias("dim"),
+        safe_size("embedding").alias("dim"),
         F.round(l1, 4).alias("l1_norm"),
         F.round(amax, 4).alias("abs_max"),
         # + 0.0 canonicalizes IEEE negative zero (round can yield -0.0
@@ -5363,13 +5336,11 @@ def q_packed_sequences(spark: SparkSession, sf: str) -> DataFrame:
     # then swap engine-arbitrarily (caught by the round-7 dirty sweep
     # after a new row perturbed the tie luck). Duplicate ids contribute
     # their summed tokens at one stream position; unique ids unchanged.
-    from statline_bq_spark.functions.text import safe_size_sql, tokens_sql
-
     toks = (
         d.selectExpr(
             "lang",
             "doc_id",
-            f"CAST({safe_size_sql(tokens_sql('text'))} AS bigint)"
+            f"CAST({token_count_sql('text')} AS bigint)"
             " AS n_tokens",
         )
         .groupBy("lang", "doc_id")
@@ -6091,19 +6062,13 @@ def q_training_data_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     ids are needed, key the dedup on xxhash64(text) instead and shuffle
     8-byte keys (see ``operators/dedup.exact_dedup``).
     """
-    from statline_bq_spark.functions.text import (
-        safe_size_sql,
-        stopword_ratio_sql,
-        tokens_sql,
-    )
-
     d = read_table(spark, sf, "documents")
     # SQL-text form (round 12): identical trees, one round trip per column
     feat = d.selectExpr(
         "doc_id",
         "lang",
         "text",
-        f"CAST({safe_size_sql(tokens_sql('text'))} AS bigint) AS n_tokens",
+        f"CAST({token_count_sql('text')} AS bigint) AS n_tokens",
         f"{stopword_ratio_sql('text')} AS stop_ratio",
     )
     kept = feat.filter("(n_tokens BETWEEN 20 AND 80) AND stop_ratio < 0.2D")
@@ -6941,10 +6906,8 @@ def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     terms = d.select(
         "doc_id",
         # ASCII fold, not lower(): terms land in compared output
-        # (see _ascii_lower — Unicode case mapping is engine-divergent)
-        F.explode(F.split(F.trim(_ascii_lower("text")), r"\s+")).alias(
-            "term"
-        ),
+        # (see text.ascii_fold_sql — Unicode case mapping is engine-divergent)
+        F.expr(f"explode({tokens_sql(ascii_fold_sql('text'))}) AS term"),
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -6970,7 +6933,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
 ORACLE_TFIDF_TOP_TERMS = f"""
 WITH terms AS (
   SELECT doc_id,
-         unnest(string_split_regex(trim({_sql_ascii_lower("text")}),
+         unnest(string_split_regex(trim({ascii_fold_sql("text")}),
                                    '\\s+')) AS term
   FROM documents
 ),
@@ -8044,7 +8007,7 @@ def q_hard_negative_mining(spark: SparkSession, sf: str) -> DataFrame:
     (a skewed exchange at 100×); `max_by` reduces map-side, so the
     exchange carries one partial row per (query, input partition)."""
     from statline_bq_spark.functions.vectors import (
-        cosine_from_norms_sql,
+        cosine_from_norms,
         l2_norm_sql,
     )
 
@@ -8073,11 +8036,7 @@ def q_hard_negative_mining(spark: SparkSession, sf: str) -> DataFrame:
         .join(q, F.col("neg_label") != F.col("q_label"), "inner")
         .withColumn(
             "_sim",
-            F.expr(
-                cosine_from_norms_sql(
-                    "_c_vec", "_q_vec", "_c_nrm", "_q_nrm"
-                )
-            ),
+            cosine_from_norms("_c_vec", "_q_vec", "_c_nrm", "_q_nrm"),
         )
     )
     best = scored.groupBy("q_id", "q_label").agg(
@@ -8992,11 +8951,9 @@ def q_conjunctive_term_search(spark: SparkSession, sf: str) -> DataFrame:
     length, not corpus size (the inverted-index property). Ranking is
     combined term frequency with doc_id tiebreak; scores are integer
     counts, so ranks are engine-exact."""
-    from statline_bq_spark.functions.text import tokens as _tokens
-
     d = read_table(spark, sf, "documents")
     postings = (
-        d.select("doc_id", F.explode(_tokens("text")).alias("tok"))
+        d.select("doc_id", F.explode(tokens("text")).alias("tok"))
         .withColumn("term", F.lower(F.regexp_replace("tok", r"[^A-Za-z0-9]", "")))
         .filter(F.col("term").isin("data", "join"))
         .groupBy("doc_id", "term")
@@ -11479,10 +11436,8 @@ def q_keyword_in_context(spark: SparkSession, sf: str) -> DataFrame:
     UDF, no re-scan per occurrence; the context assembly is
     try_element_at arithmetic on the SAME array (ANSI mode errors on
     out-of-bounds element_at; try_ yields NULL and concat_ws skips it)."""
-    from statline_bq_spark.functions.text import tokens as _tokens
-
     d = read_table(spark, sf, "documents")
-    toks = d.select("doc_id", _tokens("text").alias("tk"))
+    toks = d.select("doc_id", tokens("text").alias("tk"))
     # tk rides THROUGH the explode instead of a join-back to toks: the
     # join-back would (a) shuffle the whole token-array table twice and
     # (b) fan out hits x copies on a DUPLICATED doc_id — each row's hits

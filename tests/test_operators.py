@@ -1346,7 +1346,7 @@ def test_ascii_tokenization_contract():
     import re
 
     from statline_bq_spark.functions.udtf import make_chunk_udtf  # noqa: F401
-    from statline_bq_spark.workload import _ASCII_LOWER, _ASCII_UPPER
+    from statline_bq_spark.functions.text import _ASCII_LOWER, _ASCII_UPPER
 
     assert len(_ASCII_UPPER) == len(_ASCII_LOWER) == 26
     # the chunker's split must keep a NBSP-joined token intact, exactly
@@ -1755,7 +1755,7 @@ def test_token_counts_are_session_mode_invariant(spark):
             rows = df.select(
                 token_count("text").alias("n"),
                 bpe_ish_token_count("text").alias("b"),
-                safe_size(F.split("text", " ")).alias("s"),
+                safe_size("split(text, ' ')").alias("s"),
             ).collect()
             got = {(r.n, r.b, r.s) for r in rows}
             assert got == {(3, 3, 3), (None, None, None)}, (mode, got)
@@ -1779,7 +1779,7 @@ def test_stopword_fold_is_ascii_only(spark):
     )
     rows = df.select(
         F.round(stopword_ratio("text"), 4).alias("r"),
-        ascii_fold(F.col("text")).alias("f"),
+        ascii_fold("text").alias("f"),
     ).collect()
     got = {(r.r, r.f) for r in rows}
     # 5 of 7 stopwords (IN, in, The, THE, of — İN and ıN excluded)
@@ -1789,22 +1789,57 @@ def test_stopword_fold_is_ascii_only(spark):
     }, got
 
 
-def test_stopword_ratio_twins_agree_on_quoted_stopwords(spark):
-    """A custom stopword holding a quote (``don't``) goes into the SQL twin
+def test_stopword_ratio_escapes_quoted_stopwords(spark):
+    """A custom stopword holding a quote (``don't``) goes into the SQL text
     as an escaped literal: unescaped, it ended the string early and broke
-    the expression."""
-    from statline_bq_spark.functions.text import stopword_ratio, stopword_ratio_sql
+    the expression. Ratios are hand-counted over the folded tokens."""
+    from statline_bq_spark.functions.text import stopword_ratio
 
-    stops = ("don't", "the")
     df = spark.createDataFrame(
         [("Don't stop the music",), ("dont THE don't",), ("no stopwords",)],
         "text string",
     )
     rows = df.select(
-        stopword_ratio("text", stops).alias("col"),
-        F.expr(stopword_ratio_sql("text", stops)).alias("sql"),
+        stopword_ratio("text", ("don't", "the")).alias("r")
     ).collect()
-    assert [(r.col, r.sql) for r in rows] == [(0.5, 0.5), (2 / 3, 2 / 3), (0.0, 0.0)]
+    # don't + the of 4 tokens; THE + don't of 3 ('dont' is no stopword); 0 of 2
+    assert [r.r for r in rows] == [2 / 4, 2 / 3, 0 / 2]
+
+
+def test_sql_double_renders_finite_and_rejects_non_finite():
+    from statline_bq_spark.sqltext import sql_double
+
+    assert sql_double(0.5) == "0.5D"
+    assert sql_double(-1e-05) == "-1e-05D"
+    assert sql_double(2) == "2.0D"
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="non-finite"):
+            sql_double(bad)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf")])
+def test_dedup_thresholds_reject_non_finite_before_any_job(spark, bad):
+    """A NaN/Inf Jaccard threshold has no SQL literal: both pair finders
+    raise ValueError while building, before any Spark job runs (it used to
+    render as ``nanD``/``infD`` and fail deep in analysis)."""
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"non-finite-threshold-{bad}"
+    sc.setJobGroup(group, "non-finite dedup thresholds")
+    try:
+        with pytest.raises(ValueError, match="non-finite"):
+            dedup.ngram_jaccard_pairs(df, threshold=bad)
+        with pytest.raises(ValueError, match="non-finite"):
+            dedup.minhash_lsh_pairs(df, jaccard_threshold=bad)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(tracker.getJobIdsForGroup(group)) == []
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
 def test_kmeans_parallel_tiny_corpus_pads_to_k(spark):

@@ -418,7 +418,7 @@ def test_streaming_neardup_filter_collapses_duplicate_texts(spark, tmp_path):
     # the filter keeps exactly one doc per distinct FINGERPRINT — which is
     # at most the distinct-text count (identical texts always collapse)
     # and strictly less when near-identical texts share a fingerprint
-    want = docs.groupBy(simhash64(F.col("text"))).count().count()
+    want = docs.groupBy(simhash64("text")).count().count()
     distinct_texts = docs.groupBy(F.xxhash64("text")).count().count()
     assert got == want, f"kept {got}, distinct fingerprints {want}"
     assert got <= distinct_texts
