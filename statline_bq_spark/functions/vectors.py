@@ -79,6 +79,22 @@ def l2_normalize_sql(a: str) -> str:
     )
 
 
+def finite_vector_sql(a: str) -> str:
+    """TRUE iff the embedding ``a`` is usable: not NULL, and no component
+    is NULL, NaN or ±Infinity (one such component poisons every dot product
+    it touches). Codegen'd IsNotNull plus a short-circuiting EXISTS. The
+    lambda checks ``isnull`` explicitly: a NULL component would otherwise
+    make the EXISTS three-valued NULL, dropped by a filter only by
+    accident and diverging from any oracle that counts non-finite
+    components (NOT isfinite(NULL) is NULL, never TRUE).
+    ``CAST('Infinity' AS DOUBLE)`` constant-folds to the Infinity
+    literal."""
+    return (
+        f"(({a} IS NOT NULL) AND (NOT exists({a}, x -> (isnull(x) OR isnan(x))"
+        " OR abs(x) = CAST('Infinity' AS DOUBLE))))"
+    )
+
+
 # -- Column forms: one parsed expression each -------------------------------
 
 

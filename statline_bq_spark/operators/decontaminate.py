@@ -218,27 +218,19 @@ def semantic_decontaminate(
     """
     from statline_bq_spark.functions.vectors import (
         cosine_from_norms_sql,
+        finite_vector_sql,
         l2_norm_sql,
     )
 
-    def _usable(c: str) -> str:
-        # NULL, zero-norm (cosine NULL via try_divide) and NaN/Inf-
-        # poisoned vectors are un-scorable. The explicit non-finite guard
-        # matters because a NaN cosine is NOT NULL: Spark evaluates
-        # NaN >= threshold as TRUE (NaN sorts greatest), which would
-        # silently DROP every encoder-failed corpus row as 'contaminated'
-        # — un-scorable rows must SURVIVE (contamination unproven).
-        # (SQL-text form, round 12: identical IsNotNull/Not(Exists) tree,
-        # one py4j round trip; CAST('Infinity' AS DOUBLE) folds to the
-        # Infinity literal.)
-        return (
-            f"(`{c}` IS NOT NULL) AND (NOT exists(`{c}`,"
-            " x -> (isnull(x) OR isnan(x))"
-            " OR abs(x) = CAST('Infinity' AS DOUBLE)))"
-        )
-
+    # NULL, zero-norm (cosine NULL via try_divide) and NaN/Inf-poisoned
+    # vectors are un-scorable. The explicit non-finite guard matters
+    # because a NaN cosine is NOT NULL: Spark evaluates NaN >= threshold
+    # as TRUE (NaN sorts greatest), which would silently DROP every
+    # encoder-failed corpus row as 'contaminated' — un-scorable rows must
+    # SURVIVE (contamination unproven).
+    usable = finite_vector_sql(f"`{vec_col}`")
     b = F.broadcast(
-        benchmark.filter(_usable(vec_col)).selectExpr(
+        benchmark.filter(usable).selectExpr(
             f"`{vec_col}` AS _b_vec",
             f"{l2_norm_sql(f'`{vec_col}`')} AS _b_nrm",
         )
@@ -255,7 +247,7 @@ def semantic_decontaminate(
     # similarity is bit-identical.
     guarded = corpus.selectExpr(
         "*",
-        f"({_usable(vec_col)}) AS _usable_vec",
+        f"{usable} AS _usable_vec",
         f"{l2_norm_sql(f'`{vec_col}`')} AS _c_nrm",
     )
     return (

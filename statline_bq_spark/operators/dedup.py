@@ -583,46 +583,28 @@ def ngram_jaccard_pairs(
 # SimHash
 # --------------------------------------------------------------------------
 
-def simhash64(text_col: str) -> Column:
+def simhash64_sql(text_col: str) -> str:
     """64-bit SimHash fingerprint of whitespace tokens, as bigint.
 
     Classic construction: per token take xxhash64, add +1/-1 per bit into 64
-    counters, emit bit i = 1 iff counter_i > 0. Entirely built-in
-    higher-order expressions (aggregate over the token array into an
-    array<int> of counters, then fold the counters into one bigint).
-    """
-    toks = tokens(text_col)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    # Literal bit masks (bit 63 is the sign bit in a signed long).
-    masks = F.array(
-        *[
-            F.lit((1 << i) if i < 63 else -(1 << 63)).cast("bigint")
-            for i in range(64)
-        ]
-    )
-    zeros = F.array_repeat(F.lit(0), 64)
-    counters = F.aggregate(
-        hashes,
-        zeros,
-        lambda acc, h: F.zip_with(
-            acc,
-            masks,
-            lambda cnt, m: cnt
-            + F.when(h.bitwiseAND(m) != 0, F.lit(1)).otherwise(F.lit(-1)),
-        ),
-    )
-    bit_values = F.zip_with(
-        counters,
-        masks,
-        lambda cnt, m: F.when(cnt > 0, m).otherwise(F.lit(0).cast("bigint")),
-    )
-    return F.aggregate(
-        bit_values, F.lit(0).cast("bigint"), lambda acc, x: acc.bitwiseOR(x)
+    counters, emit bit i = 1 iff counter_i > 0 (ties → 0: the vote rule of
+    :func:`simhash_fingerprints`). Entirely built-in higher-order
+    expressions: fold the token hashes into an array<int> of counters, then
+    fold the counters into one bigint; ``shiftleft(1L, 63)`` is the sign
+    bit."""
+    return (
+        "aggregate(transform(aggregate("
+        f"transform({tokens_sql(text_col)}, t -> xxhash64(t)),"
+        " array_repeat(0, 64),"
+        " (acc, h) -> transform(acc, (cnt, i) ->"
+        " cnt + CASE WHEN shiftright(h, i) & 1L = 1L THEN 1 ELSE -1 END)),"
+        " (cnt, i) -> CASE WHEN cnt > 0 THEN shiftleft(1L, i) ELSE 0L END),"
+        " 0L, (acc, x) -> acc | x)"
     )
 
 
-#: bit 63 is the sign bit in a signed long.
-_BIT_MASKS = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
+def simhash64(text_col: str) -> Column:
+    return F.expr(simhash64_sql(text_col))
 
 
 def simhash_fingerprints(

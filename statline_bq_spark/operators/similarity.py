@@ -35,6 +35,7 @@ from statline_bq_spark.functions.vectors import (
     cosine_from_norms_sql,
     cosine_similarity,
     dot_sql,
+    finite_vector_sql,
     l2_norm,
     l2_norm_sql,
 )
@@ -53,14 +54,9 @@ def _drop_null_vectors(
     engine-defined (Spark sorts NaN greatest; IEEE comparisons say
     false). There is no partial credit for a half-failed embedding: one
     bad component poisons every dot product it touches, so the whole
-    vector is unusable. The filter is codegen'd (IsNotNull + a
-    short-circuiting EXISTS over the array) and rides the scan.
-    Found by the round-6 NaN-component dirty probe (11 of 16 embedding
-    queries crashed or silently diverged without it). The lambda checks
-    ``isNull`` explicitly: a NULL component would otherwise make the
-    EXISTS three-valued-NULL — still dropped by the filter, but by
-    accident, and diverging from any oracle that counts non-finite
-    components (NOT isfinite(NULL) is NULL, never TRUE).
+    vector is unusable. The filter (``finite_vector_sql``) is codegen'd
+    and rides the scan. Found by the round-6 NaN-component dirty probe
+    (11 of 16 embedding queries crashed or silently diverged without it).
 
     ``id_col`` (round 8, found by the NULL-PK dirty class): search and
     assignment paths that EMIT the row's id also require it non-NULL —
@@ -70,15 +66,7 @@ def _drop_null_vectors(
     paths would otherwise mangle NULL through an int64 cast. Fit-only
     paths (centroids, codebooks) and storage transforms (quantization)
     pass ``id_col=None``: content is usable regardless of identity."""
-    # SQL-text form (round 12 driver-floor batching): parses to the
-    # identical IsNotNull/Not(Exists(lambda)) tree in one py4j round trip
-    # per filter; CAST('Infinity' AS DOUBLE) constant-folds to the same
-    # Infinity literal F.lit(float('inf')) builds.
-    unusable = (
-        f"exists(`{vec_col}`, x -> (isnull(x) OR isnan(x))"
-        " OR abs(x) = CAST('Infinity' AS DOUBLE))"
-    )
-    cond = f"((`{vec_col}` IS NOT NULL) AND (NOT {unusable}))"
+    cond = finite_vector_sql(f"`{vec_col}`")
     if id_col is not None:
         cond = f"(`{id_col}` IS NOT NULL) AND {cond}"
     return df.filter(cond)

@@ -54,6 +54,17 @@ class DatasetResult:
     row_counts: dict[str, int] = field(default_factory=dict)
 
 
+def _inheriting(spark: SparkSession, target: Callable) -> Callable:
+    """``target`` wrapped to run under the caller's local properties (job
+    group, ...). Wrap once per task: each wrap clones the properties, so
+    concurrent jobs never share one Properties object (a job sets its SQL
+    execution id in it). With PySpark's pinned-thread mode off,
+    ``inheritable_thread_target`` hands back its argument, the session,
+    instead of a decorator; the target then runs bare."""
+    wrap = inheritable_thread_target(spark)
+    return target if wrap is spark else wrap(target)
+
+
 def process_dataset(
     spark: SparkSession,
     dataset_id: str,
@@ -105,11 +116,8 @@ def process_dataset(
     todo = sorted(ingest_tables(dict(tables)).items())
     workers = max(1, min(len(todo), spark.sparkContext.defaultParallelism))
     with ThreadPoolExecutor(workers) as pool:
-        # One wrapper per task: each wrap clones the caller's local
-        # properties (job group, ...), so concurrent jobs never share one
-        # Properties object (a job sets its SQL execution id in it).
         futures = [
-            pool.submit(inheritable_thread_target(spark)(land), table, thunk)
+            pool.submit(_inheriting(spark, land), table, thunk)
             for table, thunk in todo
         ]
         wait(futures, return_when=FIRST_EXCEPTION)

@@ -20,6 +20,18 @@ Design notes (100 TB north star):
   session starts: a driver that brings its own vanilla session (the
   ``__spark_entry__`` contract) keeps Spark's 100 entries, so deployments
   should launch with ``--conf spark.sql.codegen.cache.maxEntries=1000``.
+- Python worker bootstrap, local mode only. Before each task, planner call
+  or stream-source start, PySpark's worker calls
+  ``importlib.invalidate_caches()``; up to CPython 3.12 that eagerly
+  re-reads the directory of every zip on ``sys.path`` (``pyspark.zip``,
+  the spark-core jar, py4j: ~27k entries, 0.2-0.3 s of CPU) once per
+  importer, whatever the data. ``get_spark`` puts
+  ``workerboot/sitecustomize.py`` on ``spark.executorEnv.PYTHONPATH``
+  (ahead of any caller-supplied value): every Python process the JVM
+  starts then keeps an archive's directory while the archive is unchanged
+  (CPython 3.13 made the re-read lazy). Only when ``get_spark`` launches a
+  local master: cluster executors may not see this checkout's path, and a
+  session the caller already started keeps its own environment.
 """
 
 from __future__ import annotations
@@ -29,6 +41,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+#: Directory holding only the Python worker bootstrap (``sitecustomize.py``).
+WORKER_BOOT_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "workerboot"
+)
 
 
 def _default_driver_mem() -> str:
@@ -126,9 +143,18 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
+    extra_conf = dict(extra_conf or {})
     if not SparkSession.getActiveSession():
         builder = builder.master(master)
         if master.startswith("local"):
+            # Executor env, not the driver's: an exported PYTHONPATH would
+            # leak into every subprocess the driver starts. The JVM passes
+            # it to workers, planners and the stream-source runner alike
+            # (spark.python.daemon.module reaches pyspark.worker only).
+            key = "spark.executorEnv.PYTHONPATH"
+            extra_conf[key] = os.pathsep.join(
+                p for p in (WORKER_BOOT_DIR, extra_conf.get(key)) if p
+            )
             # PySpark's default spark.driver.memory is 1g, and in local
             # mode that IS the whole executor heap — found when the
             # sf1.0 (6M-lineitem) bench OOMed in a pair-count hash
@@ -149,6 +175,6 @@ def get_spark(
                     "SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()
                 ),
             )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

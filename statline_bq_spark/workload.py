@@ -36,6 +36,7 @@ from statline_bq_spark.functions.text import (
     tokens,
     tokens_sql,
 )
+from statline_bq_spark.functions.vectors import finite_vector_sql
 from statline_bq_spark.io import read_table, register_views
 from statline_bq_spark.sqltext import sql_double
 from statline_bq_spark.functions import pii
@@ -288,19 +289,12 @@ FROM q
 def _finite_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Workload-side twin of ``similarity._drop_null_vectors`` for queries
     that read the embeddings table directly (centroids, drift,
-    quantization, …). Codegen'd IsNotNull + short-circuit EXISTS. The
-    lambda includes ``isNull``: without it a NULL component makes the
-    EXISTS (and the filter) NULL — dropped here but KEPT by the oracle's
-    old list_filter-count form, a silent cross-engine divergence. The
-    size clause enforces the corpus's declared dimensionality
+    quantization, …): the same ``finite_vector_sql`` predicate, plus a
+    size clause that enforces the corpus's declared dimensionality
     (:data:`_EMB_DIM`): an empty or truncated vector is un-scorable."""
-    # SQL-text form (round 12 driver-floor batching): identical
-    # And(And(IsNotNull, size=dim), Not(Exists)) tree, one py4j round trip
     return df.filter(
-        f"((`{vec_col}` IS NOT NULL)"
-        f" AND size(`{vec_col}`) = {int(_EMB_DIM)})"
-        f" AND (NOT exists(`{vec_col}`, x -> (isnull(x) OR isnan(x))"
-        " OR abs(x) = CAST('Infinity' AS DOUBLE)))"
+        f"{finite_vector_sql(f'`{vec_col}`')}"
+        f" AND size(`{vec_col}`) = {int(_EMB_DIM)}"
     )
 
 

@@ -408,6 +408,17 @@ def test_simhash_near_for_near_texts(spark):
     assert hamming(fp[1], fp[2]) < 16
 
 
+def test_simhash64_matches_simhash_fingerprints(spark):
+    """The column form and the per-doc aggregate share one vote rule (bit
+    set iff more tokens have it than not; ties → 0): equal fingerprints
+    for every doc with at least one token."""
+    docs = read_table(spark, SF_SMOKE, "documents")
+    fp = dedup.simhash_fingerprints(docs)
+    both = docs.select("doc_id", dedup.simhash64("text").alias("col")).join(fp, "doc_id")
+    assert both.count() == fp.count() > 0
+    assert both.filter("col <=> simhash").count() == fp.count()
+
+
 # --- similarity internals ---------------------------------------------------
 
 def test_lsh_ann_self_bucket_recall(spark):

@@ -130,6 +130,22 @@ def test_landing_jobs_run_under_the_callers_job_group(spark, tmp_path, dataset):
     assert len(tracker.getJobIdsForGroup("pipeline-land-T1")) >= len(res.files)
 
 
+def test_landing_without_pinned_threads(spark, tmp_path, dataset, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target`` returns
+    its argument unchanged (here: the session); landing still works."""
+    from statline_bq_spark import pipeline
+
+    monkeypatch.setattr(pipeline, "inheritable_thread_target", lambda f: f)
+    tables, metadata = dataset
+    res = process_dataset(
+        spark, "T1", tables, metadata,
+        storage_root=str(tmp_path), endpoint="local", load_date="20240101",
+    )
+    assert res.row_counts == {
+        "cbs.v3.T1_DataProperties": 1, "cbs.v3.T1_Regio": 5, "cbs.v3.T1_TypedDataSet": 25,
+    }
+
+
 def test_failed_table_lands_no_metadata_and_registers_nothing(spark, tmp_path, dataset):
     """One failing table fails the call after the other writes finish:
     no metadata side file, no namespace, and the rerun is not skipped."""
