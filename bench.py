@@ -19,13 +19,16 @@ spread evidence); a fixed pure-Python CPU probe is timed before and after
 the sweep ("cpu_probe_sec") so a slow-host capture is self-identifying.
 Both probes run with NO Spark JVM resident (the end probe fires after
 spark.stop(), round 10) so they measure comparable host states. A capture
-whose end probe drifts >15% above the start, whose 5-min loadavg exceeds
-cpus/4 after the JVM is gone, or whose hypervisor steal time exceeds 2%
-of all host cycles over the capture window ("steal_pct", round 11 — steal
-is invisible to both loadavg and probe drift, and measured 5-12% steal
-made two same-code captures land 16.7 s vs 29.2 s) is tagged
-"polluted": true — the artifact still prints, but re-run on a quiet host
-for the headline number.
+whose end probe drifts >15% above the start, whose hypervisor steal time
+exceeds 2% of all host cycles over the capture window ("steal_pct",
+round 11 — steal is invisible to probe drift, and measured 5-12% steal
+made two same-code captures land 16.7 s vs 29.2 s), or in which other
+processes used more than 5% of all host cycles ("foreign_cpu_share": host
+busy ticks minus this process tree's — this interpreter, the JVM and its
+Python workers — over all host ticks) is tagged "polluted": true — the
+artifact still prints, but re-run on a quiet host for the headline number.
+Load average is not used: the bench's own JVM keeps it near 1.0, which a
+4-core host cannot tell from foreign load.
 Wall time remains load-sensitive — the load-INDEPENDENT signals
 ("shuffle_write_mb", "spilled_bytes_total") are the metrics to compare
 across rounds.
@@ -123,14 +126,15 @@ BENCH_QUERIES = (
 )
 
 
-def cpu_ticks() -> tuple[int, int] | None:
-    """(steal_ticks, total_ticks) from /proc/stat, or None off-Linux.
+#: Share of all host ticks that other processes may use before a capture
+#: counts as polluted.
+FOREIGN_CPU_LIMIT = 0.05
 
-    Hypervisor steal is invisible to loadavg AND to probe start/end drift
-    (constant steal slows both probes equally), yet it is exactly what
-    made two same-code captures land 16.7 s vs 29.2 s in the round-11
-    post-reboot window (sampled 5-12% steal under load). Sampling the
-    counter around the sweep makes that failure mode self-identifying."""
+
+def _host_ticks() -> tuple[int, int, int] | None:
+    """(busy, steal, total) ticks from /proc/stat, or None off-Linux.
+
+    busy excludes idle, iowait and steal."""
     try:
         with open("/proc/stat") as f:
             parts = f.readline().split()
@@ -140,9 +144,48 @@ def cpu_ticks() -> tuple[int, int] | None:
         # are already accounted inside user/nice, so including them would
         # double-count guest ticks and deflate steal_pct on hosts running
         # nested VMs (ADVICE r11).
-        return steal, sum(vals[:8])
+        total = sum(vals[:8])
+        return total - vals[3] - vals[4] - steal, steal, total
     except (OSError, ValueError, IndexError):
         return None
+
+
+def cpu_ticks() -> tuple[int, int] | None:
+    """(steal_ticks, total_ticks) from /proc/stat, or None off-Linux.
+
+    Hypervisor steal is invisible to probe start/end drift (constant steal
+    slows both probes equally), yet it is exactly what made two same-code
+    captures land 16.7 s vs 29.2 s in the round-11 post-reboot window
+    (sampled 5-12% steal under load). Sampling the counter around the
+    sweep makes that failure mode self-identifying."""
+    ticks = _host_ticks()
+    return None if ticks is None else ticks[1:]
+
+
+def tree_ticks() -> int | None:
+    """utime+stime+cutime+cstime of this process and every live
+    descendant (the JVM and its Python workers; reaped children are in
+    their parent's cutime/cstime), or None off-Linux."""
+    parent: dict[int, int] = {}
+    ticks: dict[int, int] = {}
+    try:
+        pids = [int(name) for name in os.listdir("/proc") if name.isdigit()]
+    except OSError:
+        return None
+    for pid in pids:
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                raw = f.read()
+        except OSError:
+            continue  # exited since the listing
+        fields = raw[raw.rfind(")") + 2 :].split()
+        parent[pid] = int(fields[1])
+        ticks[pid] = sum(int(x) for x in fields[11:15])
+    tree, frontier = [os.getpid()], [os.getpid()]
+    while frontier:
+        frontier = [pid for pid, ppid in parent.items() if ppid in frontier]
+        tree.extend(frontier)
+    return sum(ticks.get(pid, 0) for pid in tree)
 
 
 def cpu_probe() -> float:
@@ -162,7 +205,8 @@ def cpu_probe() -> float:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    ticks_start = cpu_ticks()
+    ticks_start = _host_ticks()
+    own_start = tree_ticks()
     probe_start = cpu_probe()
     spark = get_spark(
         "statline-bq-spark-bench", extra_conf={"spark.ui.enabled": "true"}
@@ -232,34 +276,23 @@ def main() -> None:
         out["spilled_bytes_total"] = spill_total
     out["cpu_probe_sec"] = {"start": probe_start, "end": probe_end}
     polluted = probe_end > probe_start * 1.15
-    ticks_end = cpu_ticks()
-    if ticks_start and ticks_end and ticks_end[1] > ticks_start[1]:
-        steal_pct = round(
-            100.0
-            * (ticks_end[0] - ticks_start[0])
-            / (ticks_end[1] - ticks_start[1]),
-            2,
-        )
+    ticks_end = _host_ticks()
+    own_end = tree_ticks()
+    if ticks_start and ticks_end and ticks_end[2] > ticks_start[2]:
+        busy, steal, total = (e - s for e, s in zip(ticks_end, ticks_start))
+        steal_pct = round(100.0 * steal / total, 2)
         out["steal_pct"] = steal_pct
         # >2% of ALL host cycles stolen over the whole capture window means
         # a noisy hypervisor neighbor; walls are inflated and run-to-run
         # variance explodes (measured: 5-12% steal <=> same-code totals
-        # 16.7 s vs 29.2 s). Loadavg and probe drift both miss this.
+        # 16.7 s vs 29.2 s). Probe drift misses this.
         polluted = polluted or steal_pct > 2.0
-    try:
-        # 1/5/15-min load averages at capture end: a reading well above
-        # this process's own footprint flags an inflated capture (the
-        # BENCH_r05 failure mode) without changing any timed code path.
-        la = [round(x, 2) for x in os.getloadavg()]
-        out["loadavg"] = la
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 32))
-        # 5-min loadavg after spark.stop() should be this process's own
-        # wake; well above cpus/4 means someone else was on the host
-        polluted = polluted or la[1] > cpus / 4
-    except (OSError, ValueError):
-        # ValueError: non-numeric SPARK_GRAFT_CPUS must not kill the run
-        # AFTER the timed sweep and lose the artifact (ADVICE r10).
-        pass
+        if own_start is not None and own_end is not None:
+            # Busy ticks that neither this interpreter nor the JVM and its
+            # Python workers spent: someone else was on the host.
+            foreign = max(0.0, (busy - (own_end - own_start)) / total)
+            out["foreign_cpu_share"] = round(foreign, 4)
+            polluted = polluted or foreign > FOREIGN_CPU_LIMIT
     # Self-identifying capture quality (round-10 directive): a polluted
     # capture still prints (the driver needs an artifact) but is tagged
     # so nobody mistakes it for a quiet-host number — re-run until false.
@@ -267,7 +300,7 @@ def main() -> None:
     if polluted:
         print(
             "bench: capture flagged polluted (probe drift >15%, "
-            "steal >2%, or loadavg5 high) — re-run on a quiet host "
+            "steal >2%, or foreign CPU >5%) — re-run on a quiet host "
             "for the headline number",
             file=sys.stderr,
         )

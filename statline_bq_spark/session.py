@@ -29,9 +29,18 @@ Design notes (100 TB north star):
   ``workerboot/sitecustomize.py`` on ``spark.executorEnv.PYTHONPATH``
   (ahead of any caller-supplied value): every Python process the JVM
   starts then keeps an archive's directory while the archive is unchanged
-  (CPython 3.13 made the re-read lazy). Only when ``get_spark`` launches a
-  local master: cluster executors may not see this checkout's path, and a
-  session the caller already started keeps its own environment.
+  (CPython 3.13 made the re-read lazy). The same bootstrap, on every
+  Python version, drops ``$SPARK_HOME/python/lib/pyspark.zip`` and the
+  py4j zip from ``sys.path`` when the same package is installed as a plain
+  directory later on it with the same ``__version__``: zipimport compiles
+  every module from the archive's sources without a bytecode cache (~100
+  pyspark modules, 0.6-0.9 s per fresh process, paid by every stream's
+  source runner), while the installed copy has its ``__pycache__``. On a
+  version mismatch, a missing copy or an unreadable archive the zip stays,
+  so workers always run the JVM's release. Only when ``get_spark``
+  launches a local master: cluster executors may not see this checkout's
+  path, and a session the caller already started keeps its own
+  environment.
 """
 
 from __future__ import annotations

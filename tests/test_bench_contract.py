@@ -6,6 +6,10 @@ would cost the round's BENCH artifact."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import bench
 from statline_bq_spark.workload import ORACLES, QUERIES
 
@@ -51,6 +55,22 @@ def test_cpu_ticks_sane_or_absent():
     assert t1 is not None
     steal1, total1 = t1
     assert steal1 >= steal0 and total1 >= total0
+
+
+def test_tree_ticks_count_this_process_and_its_children():
+    """The foreign-CPU share subtracts this process tree's ticks, so CPU
+    a child spent (the JVM, its Python workers) must show up in it."""
+    t0 = bench.tree_ticks()
+    if t0 is None:  # non-Linux
+        return
+    hz = os.sysconf("SC_CLK_TCK")
+    subprocess.run(
+        [sys.executable, "-c",
+         "import time\nt = time.process_time()\n"
+         "while time.process_time() - t < 0.5: pass"],
+        check=True,
+    )
+    assert bench.tree_ticks() - t0 >= 0.4 * hz
 
 
 def test_session_factory_keeps_skew_mitigations_on():

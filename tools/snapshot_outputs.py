@@ -36,7 +36,12 @@ def main() -> None:
     mode, path = sys.argv[1], sys.argv[2]
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
     names = sys.argv[4:] or list(BENCH_QUERIES)
-    spark = get_spark("snapshot-outputs")
+    # No console progress bar: its \r-separated stage lines would share
+    # lines with the OK/FAIL report and hide it from a plain grep.
+    spark = get_spark(
+        "snapshot-outputs",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     if mode == "snapshot":
         snap = {}
